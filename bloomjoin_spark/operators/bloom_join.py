@@ -10,38 +10,46 @@ pipeline, ``R/bloomjoin.R:62-124``):
 1. keys are canonicalised with explicit casts (Catalyst's own coercion
    rules) and hashed JVM-side with ``F.xxhash64`` — whole-stage codegen,
    nothing leaves the JVM on the hot path;
-2. the build side streams once through ``mapInPandas`` producing one
-   Bloom partial per partition (numpy, Arrow batches), partials
-   tree-merge (OR) — never a flat driver collect;
-3. the merged filter is broadcast; the probe side is filtered by a
-   vectorized pandas UDF BEFORE the join exchange, so dropped rows are
-   never shuffled — that is the whole point at 100 TB: the shuffle is
-   the bottleneck, and the filter costs ~10 bits/key of broadcast
-   instead of shuffling the full probe side;
-4. the surviving rows feed a completely ordinary ``df.join`` — Catalyst
-   still picks broadcast/SMJ/SHJ, AQE still handles skew.
+2. the default engine (``engine="auto"``, whatever ``collect_metrics``
+   says) is all-JVM: one HLL sizing aggregate, Spark's own
+   ``BloomFilterImpl`` built by one treeAggregate, and a codegen
+   ``BloomFilterMightContain`` probe.  Only ``checkpoint_dir`` selects
+   the mergeable sketch engine, whose build streams once through
+   ``mapInPandas`` (one partial per partition, tree OR-merge) and whose
+   broadcast filter is probed by a vectorized pandas UDF;
+3. the probe side is filtered BEFORE the join exchange, so dropped rows
+   are never shuffled — the filter costs ~10 bits/key instead of
+   shuffling the full probe side.  Row counts before and after the
+   filter ride the action as two ``Observation``s on every engine;
+4. the surviving rows feed an ordinary ``df.join``.  When the sampled
+   pass rate times the probe side's plan-stats size fits under
+   ``spark.sql.autoBroadcastJoinThreshold``, the survivors are
+   broadcast, so the join becomes a BroadcastHashJoin and the build
+   side is never shuffled; otherwise Catalyst/AQE pick the strategy.
 
 Why not just ``spark.sql.optimizer.runtime.bloomFilter.enabled``?  That
 rule is opaque and heuristic (creation side size thresholds, no fpp
 control, no metrics). This operator is the explicit, inspectable
 version: you choose fpp/side, you get a ``BloomJoinReport`` with the
-filter's actual fill ratio and per-stage row counts (reference metadata
-parity: ``R/bloomjoin.R:266-322``).
+filter's size and per-stage row counts (reference metadata parity:
+``R/bloomjoin.R:266-322``).
 """
 
 from __future__ import annotations
 
+import math
 import warnings
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..aggregate import build_sketch
 from ..plans.planner import (
     MIN_EXPECTED_REDUCTION,
     BloomJoinReport,
+    broadcast_survivors,
     choose_prefilter_target,
     normalize_how,
     resolve_join_columns,
@@ -66,8 +74,13 @@ _BROADCAST_BUDGET_BYTES = 512 << 20
 #: engine, whose filter is broadcast once per executor.
 _NATIVE_FILTER_CAP_BYTES = 16 << 20
 
+#: log2 of the HLL sketch's register count used for filter sizing:
+#: relative standard error 1.04/sqrt(2^12) ≈ 1.6 %, so the 1.05 sizing
+#: margin sits at ≥ 3σ
+_HLL_LG_K = 12
+
 #: once-per-session latch for the native→sketch fallback warning (the
-#: per-call record lives in BloomJoinReport.engine_fallback_reason)
+#: per-call record lives in the report's engine_fallback_reason)
 _native_fallback_warned = False
 
 _NUM_RANK = {
@@ -120,25 +133,79 @@ def _key64(df: DataFrame, cols: list[str], casts: list[str | None]) -> Column:
     return F.xxhash64(*exprs)
 
 
-def _make_probe_udf(bc, acc_in=None, acc_out=None):
+def _make_probe_udf(bc):
     """Vectorized membership probe over the broadcast filter.
     ``bc.value`` unpickles the BloomSketch once per executor process."""
 
     @F.pandas_udf("boolean")
     def probe(h: pd.Series) -> pd.Series:
         bf: BloomSketch = bc.value
-        arr = h.to_numpy(dtype=np.int64).view(np.uint64)
-        mask = bf.contains_hashes(arr)
-        if acc_in is not None:
-            acc_in.add(len(arr))
-            acc_out.add(int(mask.sum()))
-        return pd.Series(mask)
+        return pd.Series(bf.contains_hashes(h.to_numpy(dtype=np.int64).view(np.uint64)))
 
     # nondeterministic stops Catalyst's constraint propagation from
     # copying the probe onto the BUILD side through the join condition —
     # the filter was built from those very keys, so it passes 100% there
     # and is pure wasted Python time
     return probe.asNondeterministic()
+
+
+def _distinct_estimate(df: DataFrame, col: str) -> tuple[int, int]:
+    """(row count, distinct estimate of ``col``) in one JVM aggregate.
+    The estimate is Spark's ``hll_sketch_agg`` with log2 K = 12
+    (relative standard error ≈ 1.6 %); ``col`` must be an int, bigint,
+    string or binary column."""
+    row = df.agg(
+        F.count(F.lit(1)),
+        F.hll_sketch_estimate(F.hll_sketch_agg(col, _HLL_LG_K)),
+    ).first()
+    return int(row[0]), int(row[1])
+
+
+def _native_filter_bytes(n: int, fpp: float) -> int:
+    """Serialized size of Spark's ``BloomFilterImpl`` for (n, fpp),
+    known before any build job: ⌊−n·ln fpp / ln²2⌋ bits in 8-byte words
+    plus the 16-byte V2 header (version, hash count, seed, word count)."""
+    bits = int(-n * math.log(fpp) / (math.log(2) ** 2))
+    return 16 + 8 * -(-bits // 64)
+
+
+def _check_native_size(n: int, fpp: float, cap: int | None = None) -> None:
+    """Raise when the native filter for (n, fpp) would exceed the
+    plan-literal cap, so callers go straight to the sketch engine
+    without paying for the native build."""
+    cap = _NATIVE_FILTER_CAP_BYTES if cap is None else cap
+    size = _native_filter_bytes(n, fpp)
+    if size > cap:
+        raise RuntimeError(
+            f"serialized native filter would be {size >> 20} MiB, above the "
+            f"{cap >> 20} MiB plan-literal cap (it would be re-serialized "
+            "into every task binary)"
+        )
+
+
+def _warn_native_fallback(ex: Exception, report, requested: str = "auto") -> None:
+    """Record why the native engine was not used and warn.  The reason
+    always lands on ``report.engine_fallback_reason``; under auto
+    dispatch the warning fires once per session (a pipeline may call an
+    operator thousands of times), while an explicitly requested native
+    engine warns on every call."""
+    global _native_fallback_warned
+    if report is not None:
+        report.engine_fallback_reason = repr(ex)
+    if requested == "native":
+        warnings.warn(
+            f"native bloom engine unavailable ({ex!r}); falling back to the "
+            "sketch engine",
+            stacklevel=3,
+        )
+    elif not _native_fallback_warned:
+        _native_fallback_warned = True
+        warnings.warn(
+            f"native bloom engine unavailable ({ex!r}); falling back to the "
+            "sketch engine (warning once per session; every affected report "
+            "carries engine_fallback_reason)",
+            stacklevel=3,
+        )
 
 
 def bloom_join(
@@ -174,6 +241,13 @@ def bloom_join(
     shuffle).  ``None`` → the 256 MB default
     (``plans.planner.MIN_PROBE_BYTES``); ``0`` disables the floor.
     ``force_prefilter=True`` bypasses it like every other gate.
+
+    ``engine="auto"`` runs the all-JVM native engine unless
+    ``checkpoint_dir`` asks for the mergeable sketch engine.
+    ``collect_metrics`` attaches two ``Observation``s to the probe side
+    (rows before and after the filter) on either engine; they fill
+    ``probe_rows_before``/``probe_rows_after`` when
+    ``report.finalize()`` is called after an action.
 
     Memory-starved executors + ``engine="bloom"``: the sketch probe is
     an ArrowEvalPython stage that queues FULL-WIDTH probe rows while
@@ -264,31 +338,34 @@ def bloom_join(
         xt, yt = dict(x.dtypes), dict(y.dtypes)
         casts = [_common_cast(xt[xc], yt[yc]) for xc, yc in pairs]
 
-        # ---- sizing input: one aggregation over the BUILD side yields
-        # both the row count and an approximate distinct-key count
-        # (partial-aggregated JVM-side HLL — no wide shuffle). The filter
-        # is sized by DISTINCT keys, the reference's right-sizing step
-        # (src/BloomFilter.cpp:102-118 shrinks to exact unique count):
-        # sizing by raw rows over-allocates m and bloats the broadcast
-        # when the build side repeats keys. The hashed key projection is
-        # persisted so sizing and sketch build share ONE evaluation of
-        # the build side's lineage (8 bytes/row).
+        # ---- engine: all-JVM unless checkpointed resume needs the
+        # mergeable partials of the sketch engine.  Row metrics are
+        # Observations on every engine, so asking for them never
+        # selects a slower one.
+        requested = engine
+        if engine == "auto":
+            engine = "bloom" if checkpoint_dir else "native"
+
+        # ---- sizing input: one JVM aggregation over the BUILD side
+        # yields the row count and an HLL distinct-key estimate.  The
+        # filter is sized by DISTINCT keys, the reference's right-sizing
+        # step (src/BloomFilter.cpp:102-118 shrinks to exact unique
+        # count): sizing by raw rows over-allocates m when the build
+        # side repeats keys.  Only the sketch engine persists the hashed
+        # projection (its Python build re-reads it); the native build
+        # is one more codegen scan, cheaper than materializing a cache.
         build_keyed = build_df.select(
             _key64(build_df, build_cols, casts).alias("__bj_key64")
         )
         n_build = n_hints.get(build_name)
         persisted = False
         if n_build is None:
-            build_keyed = build_keyed.persist()
-            persisted = True
-            stats = build_keyed.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.approx_count_distinct("__bj_key64", 0.02).alias("d"),
-            ).first()
-            report.n_build = int(stats["n"])
-            build_distinct = int(stats["d"])
+            if engine == "bloom":
+                build_keyed = build_keyed.persist()
+                persisted = True
+            report.n_build, build_distinct = _distinct_estimate(build_keyed, "__bj_key64")
             report.build_distinct_estimate = build_distinct
-            # 1.05 margin absorbs the ±2% rsd so the fpp target holds
+            # 1.05 margin: ≥ 3σ of the HLL estimate, so the fpp target holds
             n_build = max(16, int(build_distinct * 1.05))
         else:
             report.n_build = n_build
@@ -315,146 +392,80 @@ def bloom_join(
     report.used_prefilter = True
     report.prefilter_side = target
     report.build_side = build_name
-
-    # ---- engine='auto' prefers the native all-JVM path when nothing
-    # requires the sketch engine: row metrics (Python accumulators) and
-    # checkpointed resume (mergeable partials) are sketch-only, but a
-    # plain prefiltered join is strictly faster all-JVM — the probe
-    # stays inside whole-stage codegen instead of an ArrowEvalPython
-    # stage (measured 1.6× at the 2M-row bench cell, and the gap widens
-    # under executor memory pressure, where the Arrow probe pipeline
-    # thrashes GC — BENCH.md "engine choice under memory pressure").
-    # Failures below fall back to the sketch engine with a warning.
-    if engine == "auto" and not collect_metrics and checkpoint_dir is None:
-        engine = "native"
+    spark = x.sparkSession
+    probe_hash = _key64(probe_df, probe_cols, casts)
 
     # ---- engine='native': all-JVM build (stat.bloomFilter, one
     # treeAggregate) + codegen probe (BloomFilterMightContain) over the
-    # SAME canonical xxhash64 keys — fastest wall-clock path when you
-    # don't need mergeable partials / checkpointed resume / row metrics.
+    # SAME canonical xxhash64 keys.  The size cap is checked on the
+    # predicted size, before the build job; cap or private-API drift
+    # falls back to the sketch engine with a warning.
+    native_pred = None
     if engine == "native":
-        spark = x.sparkSession
-        probe_hash = _key64(probe_df, probe_cols, casts)
-        probe_filter_col = None
         try:
+            _check_native_size(n_build, fpp)
             blob = _native_build_filter(build_keyed, n_build, fpp)
-            if len(blob) > _NATIVE_FILTER_CAP_BYTES:
-                raise RuntimeError(
-                    f"serialized native filter is {len(blob) >> 20} MiB, above "
-                    f"the {_NATIVE_FILTER_CAP_BYTES >> 20} MiB plan-literal cap "
-                    "(it would be re-serialized into every task binary)"
-                )
             # build the probe Column HERE so private-API drift on the
             # probe side also degrades to the sketch engine instead of
             # raising out of bloom_join (the build and probe lean on the
             # same classic-mode ExpressionUtils helpers)
-            probe_filter_col = _native_might_contain(spark, blob, probe_hash)
-        except Exception as ex:  # private-API drift / size gate → sketch engine
-            # observable degradation (VERDICT r4 #3): record the reason on
-            # the report ALWAYS, warn once per session — auto mode must
-            # not lose the 2.6× native path silently across a Spark
-            # upgrade, but per-call warnings would spam a pipeline that
-            # calls bloom_join thousands of times
-            report.engine_fallback_reason = repr(ex)
-            global _native_fallback_warned
-            if not _native_fallback_warned:
-                _native_fallback_warned = True
-                warnings.warn(
-                    f"native bloom engine unavailable ({ex!r}); falling back "
-                    "to the two-phase sketch engine (warning once per "
-                    "session; every affected BloomJoinReport carries "
-                    "engine_fallback_reason)",
-                    stacklevel=2,
-                )
-            engine = "bloom"
-        if probe_filter_col is not None:
+            native_pred = _native_might_contain(spark, blob, probe_hash)
             report.engine = "native"
             report.filter_bits = len(blob) * 8  # serialized size (≈ m)
-            if persisted:
-                build_keyed.unpersist()
-            if selectivity_check and not force_prefilter:
-                hs = _systematic_probe_sample(probe_df, probe_hash, _SELECTIVITY_SAMPLE)
-                if len(hs):
-                    # Arrow-path createDataFrame: the row-by-row py4j
-                    # reflection version costs ~0.5-1 s for 5k rows and
-                    # dominated auto-mode's fixed overhead in the grid
-                    sample_df = spark.createDataFrame(
-                        pd.DataFrame({"h": hs.view(np.int64)})
-                    )
-                    passed = sample_df.filter(
-                        _native_might_contain(spark, blob, F.col("h"))
-                    ).count()
-                    pass_rate = passed / len(hs)
-                    report.selectivity_estimate = max(
-                        0.0, min(1.0, (pass_rate - fpp) / max(1.0 - fpp, 1e-12))
-                    )
-                    report.expected_reduction = 1.0 - pass_rate
-                    if report.expected_reduction <= MIN_EXPECTED_REDUCTION:
-                        report.used_prefilter = False
-                        report.prefilter_side = None
-                        report.skip_reasons = [
-                            f"expected reduction {report.expected_reduction:.3f} "
-                            f"≤ {MIN_EXPECTED_REDUCTION}"
-                        ]
-                        out = _standard_join(x, y, pairs, how)
-                        return (out, report) if return_report else out
-            filtered = probe_df.filter(probe_filter_col)
-            if target == "x":
-                out = _standard_join(filtered, y, pairs, how)
-            else:
-                out = _standard_join(x, filtered, pairs, how)
-            if verbose:
-                print(
-                    f"bloom_join[native]: prefiltering {target} with a "
-                    f"{len(blob) >> 10} KiB JVM filter (build n={n_build})"
-                )
-            return (out, report) if return_report else out
+        except Exception as ex:  # private-API drift / size gate → sketch engine
+            _warn_native_fallback(ex, report, requested)
 
-    # ---- distributed build: one pass, partial per partition, OR-merge
-    result = build_sketch(
-        build_keyed,
-        factory=lambda n=n_build, p=fpp: BloomSketch(n, p),
-        cols=["__bj_key64"],
-        prehashed=True,
-        fanin=fanin,
-        checkpoint_dir=checkpoint_dir,
-    )
-    sketch: BloomSketch = result.sketch
-    # broadcast-budget guard (SURVEY §7 hard parts): the 2^40-bit cap of
-    # the reference becomes a practical broadcast warning — a filter
-    # bigger than ~512 MB should be rethought (higher fpp, or let the
-    # join shuffle), not silently shipped to every executor
-    filter_bytes = sketch.m // 8
-    if filter_bytes > _BROADCAST_BUDGET_BYTES:
-        warnings.warn(
-            f"bloom filter is {filter_bytes >> 20} MiB (n={n_build}, fpp={fpp}) — "
-            f"above the {_BROADCAST_BUDGET_BYTES >> 20} MiB broadcast budget; "
-            "consider a larger fpp, an n_hint, or skipping the prefilter",
-            stacklevel=2,
+    # ---- sketch engine: distributed build, one pass, partial per
+    # partition, OR-merge; the sealed filter is broadcast once (below)
+    if native_pred is None:
+        result = build_sketch(
+            build_keyed,
+            factory=lambda n=n_build, p=fpp: BloomSketch(n, p),
+            cols=["__bj_key64"],
+            prehashed=True,
+            fanin=fanin,
+            checkpoint_dir=checkpoint_dir,
         )
-    report.build_partitions = result.n_partitions
-    report.merge_rounds = result.merge_rounds
-    report.filter_bits = sketch.m
-    report.filter_hashes = sketch.k
-    fill = sketch.fill_ratio()
-    report.filter_fill_ratio = fill
-    # distinct estimate by inverting the fill ratio: d ≈ -(m/k)·ln(1-fill)
-    if report.build_distinct_estimate is None and 0.0 < fill < 1.0:
-        report.build_distinct_estimate = int(-(sketch.m / sketch.k) * np.log1p(-fill))
-
-    if persisted:
-        build_keyed.unpersist()
-
-    probe_hash = _key64(probe_df, probe_cols, casts)
+        if persisted:
+            build_keyed.unpersist()
+        sketch: BloomSketch = result.sketch
+        # broadcast-budget guard (SURVEY §7 hard parts): the 2^40-bit cap
+        # of the reference becomes a practical broadcast warning — a
+        # filter bigger than ~512 MB should be rethought (higher fpp, or
+        # let the join shuffle), not silently shipped to every executor
+        filter_bytes = sketch.m // 8
+        if filter_bytes > _BROADCAST_BUDGET_BYTES:
+            warnings.warn(
+                f"bloom filter is {filter_bytes >> 20} MiB (n={n_build}, fpp={fpp}) — "
+                f"above the {_BROADCAST_BUDGET_BYTES >> 20} MiB broadcast budget; "
+                "consider a larger fpp, an n_hint, or skipping the prefilter",
+                stacklevel=2,
+            )
+        report.engine = "bloom"
+        report.build_partitions = result.n_partitions
+        report.merge_rounds = result.merge_rounds
+        report.filter_bits = sketch.m
+        report.filter_hashes = sketch.k
+        fill = report.filter_fill_ratio = sketch.fill_ratio()
+        # distinct estimate by inverting the fill ratio: d ≈ -(m/k)·ln(1-fill)
+        if report.build_distinct_estimate is None and 0.0 < fill < 1.0:
+            report.build_distinct_estimate = int(-(sketch.m / sketch.k) * np.log1p(-fill))
 
     # ---- sampled selectivity (O16, estimate_selectivity
     # R/bloomjoin.R:240-257) + cost-based skip (O17, :300-311): probe a
-    # driver-side sample against the just-built filter; the measured
+    # systematic sample against the just-built filter; the measured
     # pass rate IS s + (1−s)·fpr, the reference's expected_pass formula.
+    # The native engine evaluates its JVM probe inside the sample job;
+    # the sketch engine probes the sampled hashes on the driver.
+    pass_rate = None
     if selectivity_check and not force_prefilter:
-        hs = _systematic_probe_sample(probe_df, probe_hash, _SELECTIVITY_SAMPLE)
-        if len(hs):
-            pass_rate = float(sketch.contains_hashes(hs).mean())
+        if native_pred is not None:
+            hits = _systematic_probe_sample(probe_df, native_pred, _SELECTIVITY_SAMPLE)
+        else:
+            hs = _systematic_probe_sample(probe_df, probe_hash, _SELECTIVITY_SAMPLE)
+            hits = sketch.contains_hashes(hs.view(np.uint64))
+        if len(hits):
+            pass_rate = float(np.mean(hits))
             report.selectivity_estimate = max(
                 0.0, min(1.0, (pass_rate - fpp) / max(1.0 - fpp, 1e-12))
             )
@@ -475,17 +486,28 @@ def bloom_join(
                 out = _standard_join(x, y, pairs, how)
                 return (out, report) if return_report else out
 
-    spark = x.sparkSession
-    sc = spark.sparkContext
-    bc = sc.broadcast(sketch.seal())
-    acc_in = sc.accumulator(0) if collect_metrics else None
-    acc_out = sc.accumulator(0) if collect_metrics else None
-    probe_udf = _make_probe_udf(bc, acc_in, acc_out)
-
-    filtered = probe_df.filter(probe_udf(probe_hash))
+    # ---- probe: row counts before/after the filter ride the action as
+    # Observations (read by report.finalize(), no extra job)
+    probe_pred = native_pred
+    if probe_pred is None:
+        probe_pred = _make_probe_udf(spark.sparkContext.broadcast(sketch.seal()))(probe_hash)
+    filtered = probe_df
     if collect_metrics:
-        # row metrics land after an action via report.finalize()
-        report._acc_in, report._acc_out = acc_in, acc_out
+        obs = report._observations = (Observation(), Observation())
+        filtered = filtered.observe(obs[0], F.count(F.lit(1)).alias("rows"))
+    filtered = filtered.filter(probe_pred)
+    if collect_metrics:
+        filtered = filtered.observe(obs[1], F.count(F.lit(1)).alias("rows"))
+
+    # ---- survivor broadcast: a filtered side small enough for
+    # Catalyst's own broadcast threshold is broadcast, so the build side
+    # is never shuffled (the filtered side is always one the join type
+    # can build a hash relation from)
+    if broadcast_survivors(
+        pass_rate, _plan_size_bytes(probe_df), _broadcast_threshold(spark)
+    ):
+        filtered = F.broadcast(filtered)
+        report.survivors_broadcast = True
 
     if target == "x":
         out = _standard_join(filtered, y, pairs, how)
@@ -493,9 +515,9 @@ def bloom_join(
         out = _standard_join(x, filtered, pairs, how)
     if verbose:
         print(
-            f"bloom_join: prefiltering {target} with m={sketch.m} bits k={sketch.k} "
-            f"fill={fill:.3f} (build n={n_build}, {result.n_partitions} partials, "
-            f"{result.merge_rounds} merge rounds)"
+            f"bloom_join[{report.engine}]: prefiltering {target} with a "
+            f"{report.filter_bits >> 13} KiB filter (build n={n_build}"
+            f"{', survivors broadcast' if report.survivors_broadcast else ''})"
         )
     return (out, report) if return_report else out
 
@@ -530,30 +552,20 @@ def _native_build_filter(build_keyed: DataFrame, n_build: int, fpp: float) -> by
     return bytes(bos.toByteArray())
 
 
-def _systematic_probe_sample(probe_df: DataFrame, probe_hash: Column, n: int) -> np.ndarray:
-    """Hashed keys of the first ⌈n/P⌉ rows of EVERY partition, as one
-    early-terminating pass (tasks stop pulling batches once satisfied —
-    no full scan).  A ``.limit(n)`` sample collapses to the first
+def _systematic_probe_sample(probe_df: DataFrame, value: Column, n: int) -> np.ndarray:
+    """``value`` over the first ⌈n/P⌉ rows of EVERY partition, in one JVM
+    job.  ``monotonically_increasing_id`` carries the row's index within
+    its partition in its low 33 bits, so the filter keeps exactly those
+    rows; every partition is still scanned (the key column only, in
+    codegen).  A ``.limit(n)`` sample collapses to the first
     partition(s) and is arbitrarily biased when the data is clustered or
     sorted by the join key; spanning every partition is the reference's
     systematic-sampling intent (R/bloomjoin.R:240-257) at Spark scale."""
-    keyed = probe_df.select(probe_hash.alias("h"))
-    nparts = max(1, keyed.rdd.getNumPartitions())  # metadata, no job
+    nparts = max(1, probe_df.rdd.getNumPartitions())  # metadata, no job
     per = max(16, -(-n // nparts))
-
-    def head_fn(it):
-        taken = 0
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            take = min(per - taken, batch.num_rows)
-            yield batch.slice(0, take)
-            taken += take
-            if taken >= per:
-                return
-
-    pdf = keyed.mapInArrow(head_fn, schema="h bigint").toPandas()
-    return pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
+    row_in_part = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+    pdf = probe_df.where(row_in_part < per).select(value.alias("v")).toPandas()
+    return pdf["v"].to_numpy()
 
 
 def _standard_join(x: DataFrame, y: DataFrame, pairs, how: str) -> DataFrame:

@@ -1151,7 +1151,7 @@ def build_history_filter(
         # sizing and build both scan the fingerprints: persist the
         # 16-byte/row projection so the history text is read and
         # fingerprinted ONCE, not once per pass (same persist-for-two-
-        # jobs contract as bloom_join's sizing, bloom_join.py:276-292)
+        # jobs contract as bloom_join's sketch-engine sizing)
         fps = fps.persist()
         persisted = True
         n_hint = fps.agg(
@@ -1219,9 +1219,11 @@ def incremental_dedup(
     |batch| + |true duplicates|.
     """
     from .bloom_join import (
-        _NATIVE_FILTER_CAP_BYTES,
+        _check_native_size,
+        _distinct_estimate,
         _native_build_filter,
         _native_might_contain,
+        _warn_native_fallback,
         bloom_join,
     )
 
@@ -1253,25 +1255,17 @@ def incremental_dedup(
                 F.xxhash64(content_fingerprint(text_col)).alias("__bj_key64")
             ).persist()
             try:
-                n_hist = int(
-                    hk.agg(F.approx_count_distinct("__bj_key64").alias("d"))
-                    .first()["d"]
-                )
+                _, n_hist = _distinct_estimate(hk, "__bj_key64")
                 if n_hist == 0:
                     # empty history: everything is definitely new (the
                     # empty-build short-circuit, O26) — no filter job
                     hit_pred = F.lit(False)
                 else:
-                    # 1.05 margin absorbs approx_count_distinct's ±2% rsd
-                    blob = _native_build_filter(
-                        hk, max(16, int(n_hist * 1.05)), fpp
-                    )
-                    if len(blob) > _NATIVE_FILTER_CAP_BYTES:
-                        raise RuntimeError(
-                            f"serialized native filter is {len(blob) >> 20} "
-                            f"MiB, above the {_NATIVE_FILTER_CAP_BYTES >> 20} "
-                            "MiB plan-literal cap"
-                        )
+                    # 1.05 margin: ≥ 3σ of the HLL estimate; the size cap
+                    # is checked on the predicted size, before the build
+                    n_filter = max(16, int(n_hist * 1.05))
+                    _check_native_size(n_filter, fpp)
+                    blob = _native_build_filter(hk, n_filter, fpp)
                     hit_pred = _native_might_contain(
                         spark, blob, F.xxhash64(F.col("__fp"))
                     )
@@ -1282,22 +1276,7 @@ def incremental_dedup(
                 hk.unpersist()
         except Exception as ex:  # private-API drift / size gate → sketch
             hit_pred = None
-            if report is not None:
-                report.engine_fallback_reason = repr(ex)
-            import importlib
-
-            _bj = importlib.import_module("bloomjoin_spark.operators.bloom_join")
-            if not _bj._native_fallback_warned:
-                _bj._native_fallback_warned = True
-                import warnings
-
-                warnings.warn(
-                    f"native bloom engine unavailable ({ex!r}); falling back "
-                    "to the sketch engine (warning once per session; every "
-                    "affected IncrementalDedupReport carries "
-                    "engine_fallback_reason)",
-                    stacklevel=2,
-                )
+            _warn_native_fallback(ex, report)
     if hit_pred is not None:
         if report is not None:
             report.engine = "native"

@@ -2,6 +2,7 @@ from .audit import PlanAudit, plan_audit
 from .planner import (
     BloomJoinPlan,
     BloomJoinReport,
+    broadcast_survivors,
     choose_prefilter_target,
     resolve_join_columns,
     should_skip_prefilter,
@@ -13,6 +14,7 @@ __all__ = [
     "plan_audit",
     "BloomJoinPlan",
     "BloomJoinReport",
+    "broadcast_survivors",
     "choose_prefilter_target",
     "resolve_join_columns",
     "should_skip_prefilter",

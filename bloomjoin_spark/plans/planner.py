@@ -70,8 +70,12 @@ MIN_EXPECTED_REDUCTION = 0.02  # ref: 0.02 (R/bloomjoin.R:303-311)
 
 #: probe-side plan-stats floor (bytes): below this the join's whole
 #: shuffle is cheaper than the prefilter's fixed decision+build jobs
-#: (~1 s of sizing aggregation + selectivity sample), so auto mode
-#: skips.  The Spark re-expression of the reference's probe_rows < 1024
+#: (five all-JVM jobs before the join runs: HLL sizing aggregate,
+#: filter build, selectivity sample — about 0.5 s for a 250k-row probe
+#: on 4 local cores, measured with ``perfbench`` ``join_prefilter``;
+#: it was ~1 s while sizing and sampling ran through Python), so auto
+#: mode skips.  The value predates that measurement and is unchanged.
+#: The Spark re-expression of the reference's probe_rows < 1024
 #: gate (R/bloomjoin.R:385-387) — that gate fires on every call there
 #: because its planner always holds the probe vector; here the free
 #: signal is Catalyst's sizeInBytes, which exists without running a job
@@ -234,6 +238,23 @@ def should_skip_prefilter(
     return reasons
 
 
+def broadcast_survivors(
+    pass_rate: float | None,
+    probe_bytes_estimate: int | None,
+    broadcast_threshold: int | None,
+) -> bool:
+    """Broadcast the filtered side into the final join when its
+    estimated size — the sampled filter pass rate times the probe
+    side's plan-stats size — fits under autoBroadcastJoinThreshold.
+    Catalyst only sees the unfiltered size, so without the hint it
+    shuffles both sides (or AQE converts after the build side has
+    already been shuffled).  No sample, no plan stats, or a disabled
+    threshold → False."""
+    if pass_rate is None or not probe_bytes_estimate or broadcast_threshold is None:
+        return False
+    return pass_rate * probe_bytes_estimate <= broadcast_threshold
+
+
 @dataclass
 class BloomJoinPlan:
     how: str
@@ -278,24 +299,30 @@ class BloomJoinReport:
     #: VERDICT r4 #3: without this field a Spark upgrade that kills the
     #: native path degrades auto mode silently.
     engine_fallback_reason: str | None = None
-    #: probe accumulators (set by bloom_join when collect_metrics=True);
-    #: read via finalize() after an action
-    _acc_in: object = field(default=None, repr=False, compare=False)
-    _acc_out: object = field(default=None, repr=False, compare=False)
+    #: the filtered side was small enough to broadcast into the join
+    survivors_broadcast: bool = False
+    #: (before, after) probe-row Observations, set by bloom_join when
+    #: collect_metrics=True; read via finalize() after an action
+    _observations: tuple | None = field(default=None, repr=False, compare=False)
 
     def finalize(self) -> "BloomJoinReport":
         """Populate the row metrics (probe_rows_before/after,
         reduction_ratio — reference bloom_metadata fields
         ``filtered_rows``/``retained_rows``/``reduction_ratio``,
-        R/bloomjoin.R:410-433) from the probe accumulators.
+        R/bloomjoin.R:410-433) from the probe-side Observations.
 
-        Call AFTER an action has materialized the joined DataFrame.
-        Accumulators are task-level telemetry: Spark may re-evaluate the
-        probe (task retries, AQE re-execution), so the counts bound the
-        logical row counts from above; the ratio is still exact under
-        re-evaluation because both counters inflate together."""
-        if self._acc_in is not None and self._acc_in.value:
-            self.probe_rows_before = int(self._acc_in.value)
-            self.probe_rows_after = int(self._acc_out.value)
-            self.reduction_ratio = 1.0 - self.probe_rows_after / self.probe_rows_before
+        The counts are exact and come from the FIRST action on the
+        joined DataFrame.  Spark publishes them from its listener bus
+        just after that action returns, so this never blocks: while
+        they are not yet published the fields stay ``None`` and a later
+        call fills them."""
+        obs = self._observations
+        if obs is None or self.probe_rows_before is not None:
+            return self
+        if not all(o._jo.future().isCompleted() for o in obs):
+            return self
+        before, after = (int(o.get["rows"]) for o in obs)
+        self.probe_rows_before, self.probe_rows_after = before, after
+        if before:
+            self.reduction_ratio = 1.0 - after / before
         return self

@@ -166,6 +166,7 @@ def bloom_join_stream(
     from ..aggregate import build_sketch
     from ..operators.bloom_join import (
         _common_cast,
+        _distinct_estimate,
         _key64,
         _make_probe_udf,
         _standard_join,
@@ -186,15 +187,7 @@ def bloom_join_stream(
         _key64(static, [p[1] for p in pairs], casts).alias("__bj_key64")
     )
     if n_hint is None:
-        n_hint = max(
-            16,
-            int(
-                build_keyed.agg(
-                    F.approx_count_distinct("__bj_key64", 0.02)
-                ).first()[0]
-                * 1.05
-            ),
-        )
+        n_hint = max(16, int(_distinct_estimate(build_keyed, "__bj_key64")[1] * 1.05))
     result = build_sketch(
         build_keyed,
         factory=lambda n=n_hint, p=fpp: BloomSketch(n, p),

@@ -192,9 +192,9 @@ def test_engine_dispatch(spark, xy):
         bloom_join(x, y, on="id", engine="nope")
 
 
-def test_auto_engine_prefers_native_without_metrics(spark):
-    """auto → native when nothing needs the sketch engine; auto → bloom
-    whenever row metrics (default) or checkpointed resume are requested."""
+def test_auto_engine_prefers_native_without_metrics(spark, tmp_path):
+    """auto → native with and without row metrics (they are Observations
+    on every engine); auto → bloom only for checkpointed resume."""
     x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
     y = spark.range(4_000, 4_800).withColumn("vy", F.col("id") * 3)
     _, rep = bloom_join(
@@ -203,7 +203,13 @@ def test_auto_engine_prefers_native_without_metrics(spark):
     )
     assert rep.engine == "native"
     _, rep2 = bloom_join(x, y, on="id", force_prefilter=True, return_report=True)
-    assert rep2.engine == "bloom"
+    assert rep2.engine == "native"
+    got, rep3 = bloom_join(
+        x, y, on="id", force_prefilter=True, return_report=True,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    assert rep3.engine == "bloom"
+    assert_df_equal(got, x.join(y, "id", "inner"))
 
 
 def test_validation_errors(spark, xy):
@@ -221,18 +227,20 @@ def test_validation_errors(spark, xy):
 def test_report_metadata(spark):
     x = spark.range(0, 5000).withColumn("vx", F.col("id") * 2)
     y = spark.range(0, 500).withColumn("vy", F.col("id") * 3)
-    got, rep = bloom_join(x, y, on="id", how="inner", force_prefilter=True, return_report=True)
-    n = got.count()  # action → accumulators populated
+    got, rep = bloom_join(
+        x, y, on="id", how="inner", force_prefilter=True, return_report=True,
+        engine="bloom",
+    )
+    n = got.count()  # action → observations published
     assert n == 500
     assert rep.used_prefilter and rep.prefilter_side == "x" and rep.build_side == "y"
     assert rep.filter_bits and rep.filter_bits & (rep.filter_bits - 1) == 0
     assert rep.n_build == 500
     assert rep.build_partitions >= 1
     # public row metrics (reference bloom_metadata filtered/retained/
-    # reduction fields): finalize() reads the accumulators after the
-    # action. Task-level telemetry may re-evaluate the probe, so the
-    # counts bound the logical row counts; the ratio stays exact.
-    rep.finalize()
+    # reduction fields): finalize() reads the observations after the
+    # action
+    _finalized(rep)
     assert rep.probe_rows_before >= 5000
     assert rep.probe_rows_after <= rep.probe_rows_before
     assert rep.reduction_ratio >= 0.75  # ≥75% filtered before the join
@@ -247,19 +255,31 @@ def test_prefilter_actually_reduces(spark):
         x, y, on="id", how="inner", force_prefilter=True, return_report=True
     )
     assert got.count() == 50
-    reduction = rep.finalize().reduction_ratio
+    reduction = _finalized(rep).reduction_ratio
     assert reduction > 0.95
 
 
 import contextlib
+import time
+
+
+def _finalized(rep, timeout=30.0):
+    """``rep.finalize()`` until the row counts are published: Spark's
+    listener bus delivers the Observations just after the action."""
+    deadline = time.monotonic() + timeout
+    while rep.finalize().probe_rows_before is None and time.monotonic() < deadline:
+        time.sleep(0.01)
+    return rep
 
 
 @contextlib.contextmanager
-def _no_broadcast_gate(spark):
+def _no_broadcast_gate(spark, threshold="-1"):
     """Disable BOTH free plan-stats gates (broadcast + probe floor) so a
-    test can isolate the gate it actually exercises on small data."""
+    test can isolate the gate it actually exercises on small data.  A
+    ``threshold`` other than -1 keeps broadcasting on for inputs whose
+    build side is larger than it."""
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     spark.conf.set("spark.bloomjoin.minProbeBytes", "0")
     try:
         yield
@@ -485,7 +505,9 @@ def test_broadcast_budget_warning(spark, monkeypatch):
     x = spark.range(0, 50_000).withColumn("vx", F.col("id"))
     y = spark.range(0, 20_000).withColumn("vy", F.col("id"))
     with pytest.warns(UserWarning, match="broadcast budget"):
-        got = bloom_join(x, y, on="id", how="inner", force_prefilter=True)
+        got = bloom_join(
+            x, y, on="id", how="inner", force_prefilter=True, engine="bloom"
+        )
         assert got.count() == 20_000
 
 
@@ -628,3 +650,146 @@ def test_native_engine_rejects_checkpoint(spark):
     y = spark.range(0, 10)
     with pytest.raises(ValueError, match="checkpoint_dir"):
         bloom_join(x, y, on="id", engine="native", checkpoint_dir="/tmp/nope")
+
+
+# ---------------------------------------------------------------------------
+# default call: all-JVM, observed row counts, survivor broadcast
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("engine", ["native", "bloom"])
+def test_row_counts_from_observations(spark, engine):
+    """Both engines report exact probe-side row counts from the two
+    Observations; finalize() before any action returns at once and
+    leaves the fields None."""
+    x = spark.range(0, 30_000, 1, 6).withColumn("vx", F.col("id") * 2)
+    y = spark.range(25_000, 40_000).withColumn("vy", F.col("id") * 3)
+    got, rep = bloom_join(
+        x, y, on="id", how="inner", engine=engine, force_prefilter=True,
+        return_report=True,
+    )
+    assert rep.engine == engine and rep.prefilter_side == "x"
+    assert rep.finalize().probe_rows_before is None
+    assert rep.probe_rows_after is None and rep.reduction_ratio is None
+    assert got.count() == 5_000
+    _finalized(rep)
+    true_hits = x.join(y.select("id"), "id", "left_semi").count()
+    assert rep.probe_rows_before == x.count()
+    assert true_hits <= rep.probe_rows_after <= rep.probe_rows_before
+    assert rep.reduction_ratio == 1.0 - rep.probe_rows_after / rep.probe_rows_before
+
+
+def test_row_counts_off_without_collect_metrics(spark):
+    x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
+    y = spark.range(4_000, 4_800).withColumn("vy", F.col("id") * 3)
+    got, rep = bloom_join(
+        x, y, on="id", force_prefilter=True, collect_metrics=False,
+        return_report=True,
+    )
+    assert got.count() == 800
+    assert rep.finalize().probe_rows_before is None
+    assert "CollectMetrics" not in got._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _survivor_sides(spark):
+    # equal plan sizes (1.6 MB each), 5 % key overlap: both sides are
+    # over a 512 KiB threshold, the survivors (~6 % of a side) under it
+    x = spark.range(0, 100_000, 1, 4).withColumn("vx", F.col("id") * 2)
+    y = spark.range(95_000, 195_000, 1, 4).withColumn("vy", F.col("id") * 3)
+    return x, y
+
+
+@pytest.mark.parametrize("how", ["inner", "left", "semi", "anti", "right"])
+def test_survivors_broadcast_under_threshold(spark, how):
+    """Sampled pass rate × probe plan size under the broadcast threshold
+    → the filtered side is broadcast: the join is a BroadcastHashJoin
+    built on the filtered side, and rows equal the plain join."""
+    from bloomjoin_spark.plans.audit import plan_audit
+
+    x, y = _survivor_sides(spark)
+    with _no_broadcast_gate(spark, str(512 << 10)):
+        got, rep = bloom_join(x, y, on="id", how=how, return_report=True)
+        assert rep.used_prefilter and rep.survivors_broadcast, rep.skip_reasons
+        lines = got._jdf.queryExecution().executedPlan().toString().splitlines()
+        build = "BuildLeft" if rep.prefilter_side == "x" else "BuildRight"
+        assert plan_audit(got).joins == {"BroadcastHashJoin": 1}
+        assert any("BroadcastHashJoin" in ln and build in ln for ln in lines)
+        # the broadcast subtree is the filtered side
+        assert "might_contain" in "".join(_subtree(lines, "BroadcastExchange"))
+        assert_df_equal(got, x.join(y, "id", spark_how(how)))
+
+
+def _subtree(lines, op):
+    """Lines of the first ``op`` node's subtree in a plan tree string."""
+    i = next(i for i, ln in enumerate(lines) if op in ln)
+    depth = lines[i].index(op)
+    out = [lines[i]]
+    for ln in lines[i + 1:]:
+        stripped = len(ln) - len(ln.lstrip(" :|+-"))
+        if stripped <= depth:
+            break
+        out.append(ln)
+    return out
+
+
+def test_survivors_not_broadcast_when_threshold_disabled(spark):
+    x, y = _survivor_sides(spark)
+    with _no_broadcast_gate(spark):
+        got, rep = bloom_join(x, y, on="id", how="inner", return_report=True)
+        assert rep.used_prefilter and not rep.survivors_broadcast
+        assert "strategy=broadcast" not in got._jdf.queryExecution().optimizedPlan().toString()
+        assert_df_equal(got, x.join(y, "id", "inner"))
+
+
+def test_default_call_job_budget_and_no_python(spark):
+    """The default call (no n_hint, sampled gate on) runs at most 5 Spark
+    jobs before returning — sizing, build and sample — and its plan has
+    no Python operator."""
+    from bloomjoin_spark.plans.audit import plan_audit
+
+    x, y = _survivor_sides(spark)
+    sc = spark.sparkContext
+    with _no_broadcast_gate(spark, str(512 << 10)):
+        sc.setJobGroup("bloom_join_budget", "default bloom_join call")
+        try:
+            got, rep = bloom_join(x, y, on="id", return_report=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup("bloom_join_budget")
+        assert rep.engine == "native" and rep.used_prefilter
+        assert 1 <= len(jobs) <= 5, jobs
+        audit = plan_audit(got)
+        assert audit.python_operators == [] and audit.n_row_python_udfs == 0
+
+
+def test_native_filter_size_prediction_matches_blob(spark):
+    """The size cap is checked on a prediction made before the build;
+    pin the prediction to Spark's serialized BloomFilterImpl."""
+    import importlib
+
+    bj = importlib.import_module("bloomjoin_spark.operators.bloom_join")
+    keys = spark.range(0, 2_000).select(F.xxhash64("id").alias("__bj_key64"))
+    for n, fpp in [(87_933, 0.01), (16, 0.01), (1_000, 1e-4), (500, 0.5), (123_457, 0.03)]:
+        blob = bj._native_build_filter(keys, n, fpp)
+        assert bj._native_filter_bytes(n, fpp) == len(blob), (n, fpp)
+    assert bj._native_filter_bytes(87_933, 0.01) == 105_376
+
+
+def test_size_cap_skips_native_build(spark, monkeypatch):
+    """A predicted size over the cap goes straight to the sketch engine:
+    the native build never runs."""
+    import importlib
+
+    bj = importlib.import_module("bloomjoin_spark.operators.bloom_join")
+    calls = []
+    monkeypatch.setattr(bj, "_NATIVE_FILTER_CAP_BYTES", 64)
+    monkeypatch.setattr(bj, "_native_fallback_warned", True)
+    monkeypatch.setattr(
+        bj, "_native_build_filter", lambda *a, **kw: calls.append(a) or b""
+    )
+    x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
+    y = spark.range(4_000, 4_800).withColumn("vy", F.col("id") * 3)
+    got, rep = bloom_join(x, y, on="id", force_prefilter=True, return_report=True)
+    assert calls == []
+    assert rep.engine == "bloom" and "plan-literal cap" in rep.engine_fallback_reason
+    assert_df_equal(got, x.join(y, "id", "inner"))
