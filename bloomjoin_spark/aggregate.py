@@ -11,6 +11,10 @@ them ``pmod(partition_id, ngroups)`` and OR/max/add-merge each group in
 treeAggregate shape — at 100k input partitions the driver never holds
 100k blobs (a 1 MiB Bloom partial × 100k = 100 GiB if collected flat).
 
+Grouped phase 2 (``merge_sorted_groups``): one shuffle of the
+(group, blob) partials by group, then one streaming ``mapInArrow``
+merge per sorted partition.
+
 Lineage / resume: partials can be checkpointed to parquet keyed by
 partition id + content fingerprint; a re-run recomputes ONLY missing
 partition ids (tasks for done partitions yield without consuming their
@@ -34,6 +38,15 @@ import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import (
+    DataType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from .hashing import (
     NULL_SENTINEL,
@@ -645,8 +658,9 @@ def grouped_sketch_estimates(
 ) -> DataFrame:
     """Per-group sketch estimates, FULLY DISTRIBUTED: one scan emits a
     partial per (group, input partition); one shuffle of those small
-    blobs groups each key's partials; an ``applyInPandas`` merge per
-    group emits (group, estimate, n_rows).  Per-group sketches are
+    blobs groups each key's partials, and a streaming per-partition
+    merge (:func:`merge_sorted_groups`) emits (group, estimate,
+    n_rows).  Per-group sketches are
     never collected to the driver — at 100 TB the group cardinality
     (e.g. per-source or per-domain distinct counts) can be millions,
     and this keeps the driver's footprint at zero while the shuffle
@@ -657,29 +671,102 @@ def grouped_sketch_estimates(
     ``lambda s: s.quantile(0.5)`` for per-group medians from a
     t-digest/KLL factory."""
     partials = grouped_sketch_partials(df, factory, group_col, cols, token_col)
-    gtype = dict(df.dtypes)[group_col]
-    out_schema = f"`{group_col}` {gtype}, estimate double, n_rows long"
+    return merge_group_estimates(partials, group_col, extract)
 
-    def merge_fn(key, pdf):  # (key, pdf) form; hints confuse eval-type inference
-        acc: Sketch | None = None
-        for b in pdf["blob"]:
-            s = Sketch.from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
+
+def merge_sorted_groups(
+    partials: DataFrame,
+    group_col: str,
+    fields: list[tuple[str, DataType]],
+    finish: Callable[[Sketch, int], list[tuple]],
+) -> DataFrame:
+    """Merge each group's partial blobs into one sketch and emit the
+    rows ``finish(sketch, n_rows)``, each prefixed with the group key
+    (output columns: ``group_col`` then ``fields``).
+
+    ``partials`` needs ``group_col``, ``n_rows`` and ``blob``.  One
+    shuffle hashes them by group, a sort makes each group's partials
+    contiguous within its partition, and one ``mapInArrow`` streams
+    each partition, emitting a group's rows when the key changes.
+    Python is entered once per Arrow batch rather than once per group
+    (as ``applyInPandas`` does), and memory stays at one batch plus one
+    running sketch.  A NULL key is its own group."""
+    import pyarrow as pa
+
+    out_schema = StructType(
+        [partials.schema[group_col]] + [StructField(n, t) for n, t in fields]
+    )
+    value_types = [to_arrow_type(t) for _, t in fields]
+    names = out_schema.fieldNames()
+
+    def fn(it):
+        key, acc, n_rows, key_type = None, None, 0, None
+        rows: list = []
+
+        def flush():
+            rows.extend((key, *r) for r in finish(acc, n_rows))
+
+        def out_batch():
+            cols = list(zip(*rows))
+            arrays = [pa.array(cols[0], type=key_type)] + [
+                pa.array(c, type=t) for c, t in zip(cols[1:], value_types)
+            ]
+            rows.clear()
+            return pa.RecordBatch.from_arrays(arrays, names=names)
+
+        for batch in it:
+            if key_type is None:
+                key_type = batch.schema.field(group_col).type
+            for k, n, b in zip(
+                batch.column(group_col).to_pylist(),
+                batch.column("n_rows").to_pylist(),
+                batch.column("blob").to_pylist(),
+            ):
+                s = Sketch.from_bytes(b)
+                # NaN keys group together, as in Spark's groupBy
+                if acc is not None and (k == key or (k != k and key != key)):
+                    acc = acc.merge(s)
+                    n_rows += n
+                    continue
+                if acc is not None:
+                    flush()
+                key, acc, n_rows = k, s, n
+            if rows:
+                yield out_batch()
+        if acc is not None:
+            flush()
+        if rows:
+            yield out_batch()
+
+    return (
+        partials.select(group_col, "n_rows", "blob")
+        .repartition(group_col)
+        .sortWithinPartitions(group_col)
+        .mapInArrow(fn, out_schema)
+    )
+
+
+def merge_group_estimates(
+    partials: DataFrame,
+    group_col: str,
+    extract: Callable[[Sketch], float] | None = None,
+) -> DataFrame:
+    """(group_col, estimate, n_rows) per group of ``partials``;
+    ``extract`` as in :func:`grouped_sketch_estimates`."""
+
+    def finish(acc: Sketch, n_rows: int) -> list[tuple]:
         if extract is not None:
             est = extract(acc)
         elif hasattr(acc, "estimate"):
             est = acc.estimate()
         else:
-            est = float(getattr(acc, "total", 0.0))
-        return pd.DataFrame(
-            {
-                group_col: [key[0]],
-                "estimate": [float(est)],
-                "n_rows": [int(pdf["n_rows"].sum())],
-            }
-        )
+            est = getattr(acc, "total", 0.0)
+        return [(float(est), int(n_rows))]
 
-    return partials.groupBy(group_col).applyInPandas(merge_fn, out_schema)
+    return merge_sorted_groups(
+        partials, group_col,
+        [("estimate", DoubleType()), ("n_rows", LongType())], finish,
+    )
 
 
 def grouped_topk(
@@ -693,8 +780,8 @@ def grouped_topk(
 ) -> DataFrame:
     """Per-group heavy hitters in ONE pass, fully distributed: a
     SpaceSaving partial per (group, input partition), a shuffle of the
-    KB-scale blobs, an ``applyInPandas`` merge per group emitting that
-    group's top-``k`` as rows ``(group_col, item, count_est, error,
+    KB-scale blobs, a streaming merge (:func:`merge_sorted_groups`)
+    emitting each group's top-``k`` as rows ``(group_col, item, count_est, error,
     rank)`` — count-descending with the sketch's deterministic
     tie-break (smaller item first), ``rank`` 1-based, true count ∈
     [count_est − error, count_est] per row.
@@ -732,30 +819,19 @@ def grouped_topk(
     partials = grouped_sketch_partials(
         df, lambda: TopKSketch(cap), group_col, cols, token_col, weight_col
     )
-    gtype = dict(df.dtypes)[group_col]
-    out_schema = (
-        f"`{group_col}` {gtype}, item long, count_est long, "
-        f"error long, rank int"
+
+    def finish(acc: Sketch, n_rows: int) -> list[tuple]:
+        return [
+            (item, count, err, rank)
+            for rank, (item, count, err) in enumerate(acc.topk()[:k], 1)
+        ]
+
+    return merge_sorted_groups(
+        partials, group_col,
+        [("item", LongType()), ("count_est", LongType()),
+         ("error", LongType()), ("rank", IntegerType())],
+        finish,
     )
-
-    def merge_fn(key, pdf):  # (key, pdf) form; hints confuse eval-type inference
-        acc: Sketch | None = None
-        for b in pdf["blob"]:
-            s = Sketch.from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
-        rows = acc.topk()[:k]
-        m = len(rows)
-        return pd.DataFrame(
-            {
-                group_col: pd.Series([key[0]] * m),
-                "item": pd.Series([r[0] for r in rows], dtype="int64"),
-                "count_est": pd.Series([r[1] for r in rows], dtype="int64"),
-                "error": pd.Series([r[2] for r in rows], dtype="int64"),
-                "rank": pd.Series(range(1, m + 1), dtype="int32"),
-            }
-        )
-
-    return partials.groupBy(group_col).applyInPandas(merge_fn, out_schema)
 
 
 MULTI_PARTIAL_SCHEMA = (

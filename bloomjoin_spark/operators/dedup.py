@@ -1086,7 +1086,17 @@ def simhash_dedup(
 # ---------------------------------------------------------------------------
 
 class IncrementalDedupReport:
-    """Counters from one :func:`incremental_dedup` call."""
+    """Counters from one :func:`incremental_dedup` call.
+
+    ``n_candidates`` counts the batch representatives (one per distinct
+    fingerprint) that took the exact verify anti join, and
+    ``n_definite_new`` those a Bloom miss proved new without it.  With
+    a provided ``history_filter`` or a ``checkpoint_dir``, only filter
+    hits are candidates.  In the default lane every representative is
+    exactly verified, so ``n_candidates`` is the number of
+    representatives and ``n_definite_new`` is 0; ``engine`` and
+    ``engine_fallback_reason`` are then copied from that verify
+    ``bloom_join``'s report."""
 
     __slots__ = (
         "n_batch", "n_within_dups", "n_definite_new",
@@ -1101,10 +1111,10 @@ class IncrementalDedupReport:
         self.n_candidates = 0
         self.n_cross_dups = 0
         self.filter_provided = False
-        #: 'native' (all-JVM history filter + codegen probe) or 'bloom'
+        #: 'native' (all-JVM filter + codegen probe) or 'bloom'
         #: (mergeable BloomSketch + vectorized Arrow probe)
         self.engine = ""
-        #: why auto dispatch degraded to the sketch engine (None if the
+        #: why dispatch degraded to the sketch engine (None if the
         #: native path was taken or never applicable) — the same
         #: observable-degradation contract as BloomJoinReport /
         #: DecontamReport (VERDICT r4 #3)
@@ -1132,16 +1142,18 @@ def build_history_filter(
     """Build (or resume, via ``checkpoint_dir``) a mergeable Bloom
     filter over the exact-content fingerprints of a historical corpus.
 
-    This is the persistent half of :func:`incremental_dedup`: at 100 TB
-    the history side is scanned ONCE (resumably — killed builds recompute
-    only missing partitions via the lineage checkpoint), and every
-    subsequent ingest batch probes the serialized filter without
-    touching history again.  Sizing uses a one-job
-    ``approx_count_distinct`` over the fingerprints unless ``n_hint``
-    is given (the reference's n_hint contract, R/bloomjoin.R:92-99).
+    This is the persistent half of :func:`incremental_dedup`'s sketch
+    lane: the filter is built from history ONCE (resumably — killed
+    builds recompute only missing partitions via the lineage
+    checkpoint), and every later ingest batch probes the serialized
+    filter instead of rebuilding it.  Sizing uses one JVM HLL aggregate
+    over the fingerprints with the 1.05 margin of ``bloom_join``
+    unless ``n_hint`` is given (the reference's n_hint contract,
+    R/bloomjoin.R:92-99).
     """
     from ..aggregate import build_sketch
     from ..sketches import BloomSketch
+    from .bloom_join import _distinct_estimate
 
     fps = history.select(
         content_fingerprint(text_col).alias("__fp")
@@ -1154,9 +1166,9 @@ def build_history_filter(
         # jobs contract as bloom_join's sketch-engine sizing)
         fps = fps.persist()
         persisted = True
-        n_hint = fps.agg(
-            F.approx_count_distinct("__fp").alias("d")
-        ).first()["d"]
+        _, n_distinct = _distinct_estimate(fps, "__fp")
+        # 1.05 margin: ≥ 3σ of the HLL estimate, so the fpp target holds
+        n_hint = 0 if n_distinct == 0 else int(n_distinct * 1.05)
     try:
         n = max(int(n_hint), 16)
         if int(n_hint) == 0:
@@ -1195,103 +1207,64 @@ def incremental_dedup(
     1. fingerprint both sides (md5 of lower/trim — same fingerprint as
        ``exact_dedup``, so the tiers compose);
     2. within-batch keep = min id per fingerprint (one shuffle of
-       16-byte keys at |batch| scale);
-    3. probe the batch's unique fingerprints against a Bloom filter of
-       history fingerprints (``history_filter`` if provided — built
-       once via :func:`build_history_filter`, possibly resumed from its
-       lineage checkpoint — else built here; the in-call build with no
-       ``checkpoint_dir`` uses the all-JVM native engine — treeAggregate
-       build + codegen probe, no Python stages — falling back to the
-       mergeable sketch engine on private-API drift, observable via
-       ``report.engine`` / ``engine_fallback_reason``).  Misses are
-       DEFINITELY new (Bloom has no false negatives) and skip the join
-       entirely;
-    4. only filter HITS (≈ true cross-dups + fpp·|batch| false
-       positives) take the exact anti join — issued through
-       ``bloom_join(how="anti", force_prefilter=True)``, whose planner
-       prefilters the HISTORY side by the candidates' filter
-       (``plans/planner.py`` anti → filter y), so history contributes
-       ~|candidates| rows to the verify shuffle instead of its full
-       size.
+       16-byte keys at |batch| scale), materialized once with
+       ``localCheckpoint`` and counted;
+    3. default lane (no ``history_filter``, no ``checkpoint_dir``): the
+       representatives take an exact anti join against history issued
+       through ``bloom_join(how="anti", force_prefilter=True)``.  Its
+       planner builds the filter from the SMALL side (the batch) and
+       prefilters the history side with it (``plans/planner.py`` anti →
+       filter y), so history contributes ≈ true duplicates +
+       fpp·|history| rows to the verify shuffle instead of its full
+       size.  Engine choice (all-JVM native by default), the
+       plan-literal size cap and the private-API-drift fallback are
+       ``bloom_join``'s dispatch, observable via ``report.engine`` /
+       ``engine_fallback_reason``;
+    4. sketch lane (``history_filter`` given — built once via
+       :func:`build_history_filter`, possibly resumed from its lineage
+       checkpoint — or ``checkpoint_dir`` set): the representatives
+       probe the history filter first.  Misses are DEFINITELY new (Bloom
+       has no false negatives) and skip the join; only hits
+       (≈ true cross-dups + fpp·|batch| false positives) take the same
+       prefiltered anti join as step 3.
 
-    Cost at scale: one history scan amortized over all future batches
-    (with ``checkpoint_dir``), plus per-ingest work proportional to
-    |batch| + |true duplicates|.
+    Cost per ingest on every lane: one prefiltered history scan (the
+    verify join's probe side, in codegen) plus work proportional to
+    |batch| + |true duplicates|.  Only the filter over the batch is
+    built per call; a reused ``history_filter`` saves no history scan,
+    it only shrinks the verify join's build side to the hits.
     """
-    from .bloom_join import (
-        _check_native_size,
-        _distinct_estimate,
-        _native_build_filter,
-        _native_might_contain,
-        _warn_native_fallback,
-        bloom_join,
-    )
+    from .bloom_join import bloom_join
 
     fp_expr = content_fingerprint(text_col).alias("__fp")
     bfp = batch.select(fp_expr, F.col(id_col))
     # within-batch: representative (min id) per distinct fingerprint
     reps = bfp.groupBy("__fp").agg(F.min(id_col).alias(id_col))
+    hfp = history.select(fp_expr)
 
     if history_filter is not None and report is not None:
         report.filter_provided = True
 
-    spark = batch.sparkSession
-
-    # ---- native lane: when the filter is built IN-CALL and no resumable
-    # checkpoint is requested, nothing needs the mergeable BloomSketch —
-    # build Spark's own JVM filter over the history fingerprints (one
-    # treeAggregate, no Python) and probe with the codegen
-    # BloomFilterMightContain expression, removing both Python stages
-    # (sketch build + ArrowEvalPython probe) from the ingest path.  The
-    # filter engines differ only in WHICH ~fpp false positives they
-    # admit; hits are exact-verified by the anti join below and misses
-    # are definite news under any correct Bloom filter, so the output is
-    # engine-invariant.  Same dispatch/cap/fallback contract as
-    # bloom_join engine='auto' and decontam (_gram_candidate_pred).
-    hit_pred = None
+    # one batch-sized materialization serves every consumer (the verify
+    # join's filter build and build side, the miss branch, the report
+    # counters), which would otherwise each re-run the groupBy; its
+    # count sizes the verify filter, skipping bloom_join's sizing job
+    definite_new = None
     if history_filter is None and checkpoint_dir is None:
-        try:
-            hk = history.select(
-                F.xxhash64(content_fingerprint(text_col)).alias("__bj_key64")
-            ).persist()
-            try:
-                _, n_hist = _distinct_estimate(hk, "__bj_key64")
-                if n_hist == 0:
-                    # empty history: everything is definitely new (the
-                    # empty-build short-circuit, O26) — no filter job
-                    hit_pred = F.lit(False)
-                else:
-                    # 1.05 margin: ≥ 3σ of the HLL estimate; the size cap
-                    # is checked on the predicted size, before the build
-                    n_filter = max(16, int(n_hist * 1.05))
-                    _check_native_size(n_filter, fpp)
-                    blob = _native_build_filter(hk, n_filter, fpp)
-                    hit_pred = _native_might_contain(
-                        spark, blob, F.xxhash64(F.col("__fp"))
-                    )
-                    # force analysis NOW so probe-side private-API drift
-                    # falls back here instead of failing at action time
-                    reps.where(hit_pred).schema
-            finally:
-                hk.unpersist()
-        except Exception as ex:  # private-API drift / size gate → sketch
-            hit_pred = None
-            _warn_native_fallback(ex, report)
-    if hit_pred is not None:
-        if report is not None:
-            report.engine = "native"
+        cand = reps.localCheckpoint(eager=False)
+        # counting the JVM RDD materializes the checkpoint in one job;
+        # DataFrame.count() would add an aggregation stage job
+        n_reps = cand._jdf.rdd().count()
     else:
         if history_filter is None:
             history_filter = build_history_filter(
                 history, text_col, fpp=fpp, checkpoint_dir=checkpoint_dir
             )
-        if report is not None:
-            report.engine = "bloom"
         # seal() densifies BEFORE the broadcast: an unsealed (sparse)
         # filter ships as its pooled hash list and every Python worker
         # re-densifies it on first probe — seconds per worker at 1M
         # history keys
-        bc = spark.sparkContext.broadcast(history_filter.seal())
+        bc = batch.sparkSession.sparkContext.broadcast(history_filter.seal())
 
         @F.pandas_udf("boolean")
         def _probe(s: pd.Series) -> pd.Series:
@@ -1299,58 +1272,41 @@ def incremental_dedup(
 
             return pd.Series(bc.value.contains_hashes(hash_series(s)))
 
-        hit_pred = _probe.asNondeterministic()(F.col("__fp"))
-
-    probed = reps.withColumn("__hit", hit_pred)
-    # one materialization (batch-sized: one 16-byte fingerprint + id per
-    # distinct batch doc) serves every consumer: the hit branch feeds
-    # the verify join AND its bloom_join sizing jobs, the miss branch
-    # feeds the union, and the report counters re-aggregate it — without
-    # it each of those jobs re-runs the groupBy + probe chain,
-    # multiplying the call's cost ~4× (measured: the reuse-filter cell
-    # re-evaluated the 0.9 s reps aggregate + probe three times; a
-    # checkpoint-free native-lane variant re-measured 5.5-6.9 s vs
-    # 3.8 s — the re-serialized filter literal and re-run probe scans
-    # cost more than the one checkpoint job they avoid)
-    probed = probed.localCheckpoint(eager=False)
-    # materialize the checkpoint NOW and keep the count: it upper-bounds
-    # |candidates|, so passing it as the verify join's n_hint skips
-    # bloom_join's own sizing pass (persist + count/approx-distinct job)
-    # — the filter is sized for all reps instead of just hits, a few ×
-    # larger m at the same fpp, which only loosens nothing (results and
-    # guarantees unchanged, one fewer job per ingest)
-    n_reps_total = probed.count()
-    # hit fingerprints might be in history (or are Bloom false
-    # positives): verify with an exact anti join whose history scan is
-    # itself bloom-prefiltered down to ~|candidates| rows
-    cand = probed.filter(F.col("__hit")).drop("__hit")
-    hfp = history.select(fp_expr)
-    verified_new = bloom_join(
+        probed = reps.withColumn(
+            "__hit", _probe.asNondeterministic()(F.col("__fp"))
+        ).localCheckpoint(eager=False)
+        n_reps = probed.count()
+        cand = probed.filter(F.col("__hit")).drop("__hit")
+        definite_new = probed.filter(~F.col("__hit")).drop("__hit")
+    if n_reps == 0:
+        # empty batch: nothing is new, and there is no filter to build
+        # (Spark's JVM filter build fails on an empty input)
+        return batch
+    # sized for every representative: an upper bound of the candidates
+    verified_new, bj = bloom_join(
         cand, hfp, on="__fp", how="anti",
         fpp=fpp, force_prefilter=True, collect_metrics=False,
-        n_hint={"x": max(int(n_reps_total), 16)},
+        n_hint={"x": max(int(n_reps), 16)}, return_report=True,
     )
     if report is not None:
         verified_new = verified_new.localCheckpoint(eager=False)
-    new_ids = (
-        probed.filter(~F.col("__hit")).drop("__hit")
-        .unionByName(verified_new)
-        .select(id_col)
+    new_ids = verified_new if definite_new is None else (
+        definite_new.unionByName(verified_new)
     )
-    out = batch.join(new_ids, on=id_col, how="left_semi")
+    out = batch.join(new_ids.select(id_col), on=id_col, how="left_semi")
 
     if report is not None:
         n_batch = batch.count()
-        agg = probed.agg(
-            F.count(F.lit(1)).alias("n_reps"),
-            F.sum(F.col("__hit").cast("long")).alias("n_cand"),
-        ).collect()[0]
-        n_reps = agg["n_reps"]
-        n_cand = int(agg["n_cand"] or 0)
+        n_cand = n_reps if definite_new is None else cand.count()
         n_new_cand = verified_new.count()
         report.n_batch = n_batch
         report.n_within_dups = n_batch - n_reps
         report.n_candidates = n_cand
         report.n_cross_dups = n_cand - n_new_cand
         report.n_definite_new = n_reps - n_cand
+        if definite_new is None:
+            report.engine = bj.engine
+            report.engine_fallback_reason = bj.engine_fallback_reason
+        else:
+            report.engine = "bloom"
     return out

@@ -259,7 +259,7 @@ def source_overlap_matrix(
     Plan: one `grouped_sketch_partials` pass builds a theta sketch per
     (group, partition) — one scan regardless of group count — then a
     blob-sized shuffle merges each group's partials distributed
-    (`applyInPandas`, same shape as `grouped_sketch_estimates`).  Only
+    (`merge_sorted_groups`, shared with `grouped_sketch_estimates`).  Only
     the K merged sketches (≤ 8·k bytes each) reach the driver, where
     all K·(K−1)/2 pair estimates are set operations on retained hash
     samples — zero further Spark jobs, no pairwise joins over data.
@@ -276,9 +276,9 @@ def source_overlap_matrix(
     (`ThetaSketch.error_bound_vs`; 0.0 means both sketches are exact).
     """
     import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import BinaryType
 
-    from ..aggregate import grouped_sketch_partials
+    from ..aggregate import grouped_sketch_partials, merge_sorted_groups
     from ..sketches import Sketch, ThetaSketch
     from ..sketches.theta import _FULL_THETA
 
@@ -298,16 +298,9 @@ def source_overlap_matrix(
         df, lambda: ThetaSketch(k), group_col, cols=cols, token_col=token_col
     )
     gtype = dict(df.dtypes)[group_col]
-
-    def merge_fn(key, pdf):  # (key, pdf) form; see grouped_sketch_estimates
-        acc = None
-        for b in pdf["blob"]:
-            s = Sketch.from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
-        return pd.DataFrame({group_col: [key[0]], "blob": [acc.to_bytes()]})
-
-    merged = partials.groupBy(group_col).applyInPandas(
-        merge_fn, f"`{group_col}` {gtype}, blob binary"
+    merged = merge_sorted_groups(
+        partials, group_col, [("blob", BinaryType())],
+        lambda acc, n: [(acc.to_bytes(),)],
     )
     rows = merged.collect()  # bounded: ONE ≤8k-byte blob per group
     sks = {r[group_col]: Sketch.from_bytes(bytes(r["blob"])) for r in rows}

@@ -18,9 +18,9 @@ Scale shape (the reason this is a layout, not a cache):
 - The index holds ONE row per data file.  At fpp=1e-3 the blob is
   ~1.8 bytes per data row — ~0.2 % of the data at 1 KB rows — so a
   100 TB table carries a ~200 GB index TABLE, which is why both the
-  build and the probe stay distributed: per-file partials merge via
-  ``applyInPandas`` (never collected), and the probe ships only the
-  handful of lookup-key hashes to the executors, returning only the
+  build and the probe stay distributed: per-file partials merge in a
+  streaming pass per partition (never collected), and the probe ships
+  only the handful of lookup-key hashes to the executors, returning only the
   SURVIVING FILE NAMES to the driver — the same list the reader must
   hold to plan the scan anyway.
 - With ``cluster=True`` (default) the write hash-partitions rows by
@@ -47,8 +47,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, LongType
 
-from ..aggregate import grouped_sketch_partials
+from ..aggregate import grouped_sketch_partials, merge_sorted_groups
 from ..hashing import hash_columns
 from ..sketches.base import Sketch
 from ..sketches.bloom import BloomSketch
@@ -118,22 +119,11 @@ def write_bloom_indexed(
         back, lambda: BloomSketch(int(capacity), fpp), "_file", cols=keys
     )
 
-    def _merge(mkey, pdf):
-        acc = None
-        for b in pdf["blob"]:
-            s = Sketch.from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
-        return pd.DataFrame(
-            {
-                "file": [mkey[0]],
-                "n_rows": [int(pdf["n_rows"].sum())],
-                "blob": [acc.seal().to_bytes()],
-            }
-        )
-
-    index = partials.groupBy("_file").applyInPandas(
-        _merge, "file string, n_rows long, blob binary"
-    )
+    index = merge_sorted_groups(
+        partials, "_file",
+        [("n_rows", LongType()), ("blob", BinaryType())],
+        lambda acc, n: [(int(n), acc.seal().to_bytes())],
+    ).withColumnRenamed("_file", "file")
     index.write.mode("overwrite").parquet(_index_dir(path))
     bits = BloomSketch(int(capacity), fpp).m
     return {

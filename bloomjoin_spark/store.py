@@ -31,7 +31,6 @@ from __future__ import annotations
 
 from typing import Callable, Mapping
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,6 +39,7 @@ from .aggregate import (
     PARTIAL_SCHEMA,
     grouped_sketch_partials,
     make_multi_partial_fn_arrow,
+    merge_group_estimates,
     sketch_partials,
     tree_merge,
 )
@@ -153,35 +153,12 @@ def store_estimates(
     extract: Callable[[Sketch], float] | None = None,
 ) -> DataFrame:
     """Per-group estimates from stored blobs only: one shuffle of the
-    KB-scale partials, an ``applyInPandas`` merge per group — history
-    is never rescanned and per-group sketches never reach the driver
-    (group cardinality may be millions at 100 TB).  Output:
-    (group_col, estimate, n_rows) with n_rows the exact ingested total
-    across snapshots."""
-    gtype = dict(store.dtypes)[group_col]
-    out_schema = f"`{group_col}` {gtype}, estimate double, n_rows long"
-
-    def merge_fn(key, pdf):  # (key, pdf) form; hints confuse eval-type inference
-        acc: Sketch | None = None
-        for b in pdf["blob"]:
-            s = Sketch.from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
-        if extract is not None:
-            est = extract(acc)
-        elif hasattr(acc, "estimate"):
-            est = acc.estimate()
-        else:
-            est = float(getattr(acc, "total", 0.0))
-        return pd.DataFrame(
-            {
-                group_col: [key[0]],
-                "estimate": [float(est)],
-                "n_rows": [int(pdf["n_rows"].sum())],
-            }
-        )
-
-    cols = [group_col, "n_rows", "blob"]
-    return store.select(*cols).groupBy(group_col).applyInPandas(merge_fn, out_schema)
+    KB-scale partials and a streaming per-partition merge
+    (``aggregate.merge_sorted_groups``) — history is never rescanned
+    and per-group sketches never reach the driver (group cardinality
+    may be millions at 100 TB).  Output: (group_col, estimate, n_rows)
+    with n_rows the exact ingested total across snapshots."""
+    return merge_group_estimates(store, group_col, extract)
 
 
 def sketch_store_sink(

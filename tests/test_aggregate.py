@@ -545,3 +545,100 @@ def test_grouped_topk_weighted_validation(spark):
     # weight_col without an item column is rejected up front
     with pytest.raises(ValueError, match="weight_col"):
         grouped_topk(df, "src", k=2, token_col="v", weight_col="w")
+
+
+# ---------------------------------------------------------------------------
+# shared streaming grouped merge (merge_sorted_groups)
+# ---------------------------------------------------------------------------
+
+def _driver_group_merge(partial_rows, group_col, finish):
+    """Reference: merge every group's partial blobs in a driver loop."""
+    from bloomjoin_spark.sketches import Sketch
+
+    acc: dict = {}
+    for r in partial_rows:
+        s = Sketch.from_bytes(bytes(r["blob"]))
+        k = r[group_col]
+        if k in acc:
+            acc[k] = (acc[k][0].merge(s), acc[k][1] + r["n_rows"])
+        else:
+            acc[k] = (s, r["n_rows"])
+    return {k: finish(s, n) for k, (s, n) in acc.items()}
+
+
+def _with_null_sources(spark):
+    from bloomjoin_spark.datagen import token_table
+
+    df = token_table(spark, 6_000, vocab=300, max_tok=8, num_partitions=6)
+    return df.withColumn(
+        "source", F.when(F.col("n_tok") == 2, F.lit(None)).otherwise(F.col("source"))
+    )
+
+
+def _no_grouped_pandas(df):
+    from bloomjoin_spark.plans import plan_audit
+
+    ops = plan_audit(df).python_operators
+    assert "FlatMapGroupsInPandas" not in ops and "MapInArrow" in ops, ops
+
+
+@pytest.mark.parametrize("kind", ["hll", "cms"])
+def test_grouped_sketch_estimates_equal_driver_merge(spark, kind):
+    """The streaming merge returns, per group, the exact sketch a driver
+    loop merges from the same partials (checksum of the serialized
+    sketch), the same estimate and n_rows; the NULL source stays its
+    own group; no grouped-pandas operator is planned."""
+    from bloomjoin_spark import CmsSketch, HllSketch, grouped_sketch_estimates
+    from bloomjoin_spark.aggregate import grouped_sketch_partials
+
+    import zlib
+
+    factory = (lambda: HllSketch(12)) if kind == "hll" else (
+        lambda: CmsSketch(eps=1e-2, delta=1e-2)
+    )
+    # checksum of the merged sketch's serialized form (bit identity);
+    # a lambda, so the Python workers receive it by value
+    _crc = lambda s: float(zlib.crc32(s.to_bytes()))  # noqa: E731
+    df = _with_null_sources(spark)
+    partials = grouped_sketch_partials(df, factory, "source", cols=["doc_id"]).collect()
+    for extract, ref in [
+        (_crc, lambda s, n: (_crc(s), n)),
+        (None, lambda s, n: (float(s.estimate() if kind == "hll" else s.total), n)),
+    ]:
+        out = grouped_sketch_estimates(
+            df, factory, "source", cols=["doc_id"], extract=extract
+        )
+        _no_grouped_pandas(out)
+        got = {r["source"]: (r["estimate"], r["n_rows"]) for r in out.collect()}
+        exp = _driver_group_merge(partials, "source", ref)
+        assert None in got and len(got) == len(exp)
+        assert got == exp
+
+
+def test_grouped_topk_equals_driver_merge(spark):
+    """grouped_topk's streaming merge equals the driver-side merge of
+    the same partials, NULL group included (capacity covers every
+    group's items, so the merge is order-free and exact)."""
+    from bloomjoin_spark import grouped_topk
+    from bloomjoin_spark.aggregate import grouped_sketch_partials
+    from bloomjoin_spark.sketches.topk import TopKSketch
+
+    df = _with_null_sources(spark).select(
+        "source", F.explode("tokens").alias("tok")
+    ).withColumn("tok", F.col("tok").cast("long"))
+    out = grouped_topk(df, "source", k=4, capacity=512, cols=["tok"])
+    _no_grouped_pandas(out)
+    got = {}
+    for r in out.collect():
+        got.setdefault(r["source"], []).append(
+            (r["rank"], r["item"], r["count_est"], r["error"])
+        )
+    partials = grouped_sketch_partials(
+        df, lambda: TopKSketch(512), "source", cols=["tok"]
+    ).collect()
+    exp = _driver_group_merge(
+        partials, "source",
+        lambda s, n: [(i, *t) for i, t in enumerate(s.topk()[:4], 1)],
+    )
+    assert None in got
+    assert {k: sorted(v) for k, v in got.items()} == exp

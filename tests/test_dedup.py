@@ -402,11 +402,17 @@ def test_incremental_dedup_keeps_only_new(hist_and_batch):
 
 
 def test_incremental_dedup_engine_dispatch(hist_and_batch):
-    """In-call build with no checkpoint_dir takes the all-JVM native
-    lane (r6 optimization: no Python sketch build, no ArrowEvalPython
-    probe); a provided filter keeps the mergeable sketch engine.  Both
-    lanes produce identical output (the verify join removes every
-    filter false positive; misses are exact under any Bloom filter)."""
+    """With no filter and no checkpoint_dir the engine comes from the
+    verify ``bloom_join``'s dispatch, which takes the all-JVM native
+    lane (no Python sketch build, no ArrowEvalPython probe); a provided
+    filter keeps the mergeable sketch engine.  Both lanes produce
+    identical output (the verify join removes every filter false
+    positive; misses are exact under any Bloom filter).
+
+    The ``engine == "native"`` assertion is an intentional canary for
+    private-API drift: on a Spark version whose ``ExpressionUtils`` /
+    ``BloomFilterMightContain`` moved, the library degrades to the
+    sketch engine by design, and this assertion is what reports it."""
     from bloomjoin_spark.operators import (
         IncrementalDedupReport,
         build_history_filter,
@@ -444,6 +450,72 @@ def test_incremental_dedup_with_prebuilt_checkpointed_filter(hist_and_batch, tmp
     out = incremental_dedup(batch, history, history_filter=bf, report=rep)
     assert out.count() == fresh.count()
     assert rep.filter_provided
+
+
+def _exact_incremental(batch, history):
+    """Reference: min-id representative per fingerprint, exact
+    ``left_anti`` against every history fingerprint."""
+    from bloomjoin_spark.operators import content_fingerprint
+
+    reps = batch.groupBy(content_fingerprint("text").alias("fp")).agg(
+        F.min("doc_id").alias("doc_id")
+    )
+    hist = history.select(content_fingerprint("text").alias("fp"))
+    return sorted(
+        r["doc_id"] for r in reps.join(hist, "fp", "left_anti").collect()
+    )
+
+
+def test_incremental_dedup_call_job_budget(spark, hist_and_batch):
+    """The default call (no filter, no checkpoint_dir) launches at most
+    5 jobs before its action: the representatives' checkpoint + count
+    and the verify bloom_join's filter build — history is never sized
+    or filtered at call time."""
+    from bloomjoin_spark.operators import incremental_dedup
+
+    history, batch, fresh = hist_and_batch
+    sc = spark.sparkContext
+    sc.setJobGroup("incremental_dedup_budget", "default incremental_dedup call")
+    try:
+        out = incremental_dedup(batch, history)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("incremental_dedup_budget")
+    assert 1 <= len(jobs) <= 5, jobs
+    assert out.count() == fresh.count()
+
+
+def test_incremental_dedup_forced_fallback(hist_and_batch, monkeypatch):
+    """A plan-literal cap too small for any filter sends the verify
+    bloom_join to the sketch engine: the report says so and why, and
+    the output equals the native call and an exact left_anti
+    reference."""
+    import importlib
+
+    from bloomjoin_spark.operators import IncrementalDedupReport, incremental_dedup
+
+    history, batch, _ = hist_and_batch
+    native = sorted(
+        r["doc_id"] for r in incremental_dedup(batch, history).select("doc_id").collect()
+    )
+    bj = importlib.import_module("bloomjoin_spark.operators.bloom_join")
+    monkeypatch.setattr(bj, "_NATIVE_FILTER_CAP_BYTES", 64)
+    monkeypatch.setattr(bj, "_native_fallback_warned", True)
+    rep = IncrementalDedupReport()
+    out = incremental_dedup(batch, history, report=rep)
+    got = sorted(r["doc_id"] for r in out.select("doc_id").collect())
+    assert rep.engine == "bloom"
+    assert "plan-literal cap" in rep.engine_fallback_reason
+    assert got == native == _exact_incremental(batch, history)
+
+
+def test_incremental_dedup_empty_batch(docs):
+    from bloomjoin_spark.operators import IncrementalDedupReport, incremental_dedup
+
+    rep = IncrementalDedupReport()
+    out = incremental_dedup(docs.limit(0), docs, report=rep)
+    assert out.count() == 0
+    assert rep.n_batch == 0 and rep.n_candidates == 0 and rep.n_cross_dups == 0
 
 
 def test_incremental_dedup_empty_history(docs):

@@ -276,3 +276,47 @@ def test_fd_sketch_rides_the_store(spark, tmp_path):
          for r in _vecs(0, 180).collect()]
     )
     assert np.allclose(merged.gram(), A.T @ A, rtol=1e-9, atol=1e-9)
+
+
+def test_store_estimates_equal_driver_merge(spark, tmp_path):
+    """store_estimates over two snapshots equals a driver-side merge of
+    the stored blobs, bit for bit (checksum of the merged sketch), and
+    a NULL group key stays its own group; the plan holds no
+    grouped-pandas operator."""
+    import zlib
+
+    from bloomjoin_spark import CmsSketch
+    from bloomjoin_spark.plans import plan_audit
+    from bloomjoin_spark.sketches import Sketch
+
+    path = str(tmp_path / "nstore")
+    for kind, factory in [
+        ("hll", lambda: HllSketch(12)),
+        ("cms", lambda: CmsSketch(eps=1e-2, delta=1e-2)),
+    ]:
+        for day, (lo, hi) in enumerate([(0, 3000), (3000, 5000)]):
+            docs = _docs(spark, lo, hi).withColumn(
+                "source",
+                F.when(F.col("source") == "src2", F.lit(None)).otherwise(F.col("source")),
+            )
+            append_sketch_snapshot(
+                docs, factory, f"{path}_{kind}", f"day{day}",
+                group_col="source", cols=["doc_id"],
+            )
+        store = read_sketch_store(spark, f"{path}_{kind}")
+        out = store_estimates(
+            store, "source", extract=lambda s: float(zlib.crc32(s.to_bytes()))
+        )
+        ops = plan_audit(out).python_operators
+        assert "FlatMapGroupsInPandas" not in ops and "MapInArrow" in ops, ops
+        got = {r["source"]: (r["estimate"], r["n_rows"]) for r in out.collect()}
+        exp: dict = {}
+        for r in store.collect():
+            s = Sketch.from_bytes(bytes(r["blob"]))
+            k = r["source"]
+            exp[k] = (exp[k][0].merge(s), exp[k][1] + r["n_rows"]) if k in exp else (
+                s, r["n_rows"]
+            )
+        exp = {k: (float(zlib.crc32(s.to_bytes())), n) for k, (s, n) in exp.items()}
+        assert set(got) == {"src0", "src1", None}
+        assert got == exp
